@@ -18,8 +18,12 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Default thread/partition count, overridable via SPARK_GRAFT_CPUS. */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Default thread/partition count: SPARK_GRAFT_CPUS, else the host's
+    * available processors. */
+  def cpus: String = cpusOr(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpusOr(env: Option[String]): String =
+    env.getOrElse(Runtime.getRuntime.availableProcessors.toString)
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
@@ -32,33 +36,15 @@ object GraftSession {
       // early-submitted chain's wide stage from starving the
       // critical-path chain's next stage of task slots (FIFO offers
       // slots strictly in job-submission order). A/B: PERF §36.
-      // SPARK_GRAFT_SCHEDULER=FIFO restores the old behavior.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FAIR"))
+      .config("spark.scheduler.mode", "FAIR")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE sort-merge -> shuffled-hash rewrite (guide §3.1): when every
-      // post-shuffle partition of the build side is measured below this
-      // threshold at runtime, the sort on both sides is replaced by a
-      // per-partition hash build. DEFAULT OFF ("0") since r22: the r21
-      // round shipped 64m on thin evidence (4-8% on q61/q47, one box),
-      // and the driver's ground-truth run then read the untouched q60
-      // staged path at 2.96 s vs 0.41-0.53 s everywhere else — all
-      // three 32-core reps slow, absent at 8 cores — with this rewrite
-      // the only r21 change reaching q60's two doc-sets shuffle joins
-      // (VERDICT r21 #1/#3). The r22 paired A/B/B/A re-measure showed
-      // NO robust win either way (q47 on 1.279/0.978 vs off 0.963/1.012;
-      // q61 on 0.417/0.375 vs off 0.386/0.423; q54 consistently faster
-      // OFF), so the honest default is off: a few-percent maybe-win on
-      // two queries does not buy a bimodal 6x tail on a heavy-array
-      // hash build. Note the gate reads COMPRESSED shuffle bytes — for
-      // text/array-heavy rows the decompressed per-task hash map can be
-      // several times the threshold, which is exactly q60's row shape.
-      // SPARK_GRAFT_SHJ_LOCALMAP=64m re-enables for A/Bs.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
+      // No AQE sort-merge -> shuffled-hash rewrite: Spark's own default
+      // (maxShuffledHashJoinLocalMapThreshold 0) stays. The 64m rewrite
+      // shipped in r21 was the suspect for a bimodal 6x q60 tail, and
+      // its few-percent q47/q61 win died on re-measurement (PERF §64).
       // the driver-generated events table carries TIMESTAMP(NANOS)
       // which Spark's parquet reader only surfaces as long
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -82,8 +68,8 @@ object GraftSession {
     *
     * Thresholds default to Spark's production values (256 MiB skew
     * threshold / 64 MiB advisory target — tuned for executor-memory-
-    * sized partitions); pass scaled values for small-SF probes, as
-    * SkewProbe does. Apply to sessions whose workload joins
+    * sized partitions); pass scaled values for small-SF runs, as the
+    * §40 audit did. Apply to sessions whose workload joins
     * possibly-hot keys and aggregates on them; the force flag is
     * deliberately NOT the session default because uniform workloads
     * pay the extra agg exchange for nothing.

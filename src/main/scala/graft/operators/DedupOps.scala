@@ -191,13 +191,7 @@ object DedupOps {
         val bcastSaved = bcastKeys.map(k => k -> spark.conf.getOption(k))
         var pool: java.util.concurrent.ExecutorService = null
         try {
-          // SPARK_GRAFT_STAGE_BCAST_CAP: override ("off" disables) —
-          // the A/B instrument behind PERF §28's capped-vs-uncapped
-          // staging numbers; production default stays 1m
-          sys.env.getOrElse("SPARK_GRAFT_STAGE_BCAST_CAP", "1m") match {
-            case "off" => ()
-            case cap   => bcastKeys.foreach(spark.conf.set(_, cap))
-          }
+          bcastKeys.foreach(spark.conf.set(_, "1m"))
           // Chain inventory FIRST (as thunks), so the pool is sized to
           // run every chain concurrently: the r13 pool of
           // presets.size + 2 threads queued flags/keeper/ivf behind
@@ -264,7 +258,7 @@ object DedupOps {
               // mechanism behind the §36 wall win (a single default
               // pool schedules its jobs FIFO internally). Pools spring
               // into existence on first use with default weight/
-              // minShare; under FIFO mode the property is inert.
+              // minShare.
               spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", s"graft-stage-$tag")
               val t0 = System.nanoTime()
@@ -486,8 +480,8 @@ object DedupOps {
         // small one: the range exchange's boundary SAMPLING re-executes
         // the whole post-shuffle segment (distinct + est join-backs), a
         // second full pass of the most expensive stage on the h8
-        // staging chain (CandBuildProbe: sorted write 154 s vs unsorted
-        // 15 s on the same warmed 100× corpus; PERF §47).
+        // staging chain (sorted write 154 s vs unsorted 15 s on the
+        // same warmed 100× corpus; PERF §47).
         staged(spark, sfDir, s"cand_h${p.numHashes}_b${p.numBands}")(
             lshCandidatesFrom(sigTable(spark, sfDir, p), p, BandGuard.default,
               sort = false))
@@ -673,9 +667,6 @@ object DedupOps {
     // gated on CHAIN membership (thread-local), not on "a stageAll is
     // in flight on this session", so a concurrent library caller's
     // returned plan keeps the persist it will want after staging ends.
-    // SPARK_GRAFT_BAND_PERSIST: A/B instrument behind PERF §35 —
-    // "off" disables the persist everywhere, "force" enables it even
-    // on stageAll chain threads.
     // Lifecycle (ADVICE r14 / r15 #7): inside a staged write the
     // persist is consumed exactly once by the parquet write, so it
     // unpersists via the write-completion hook; a pure library call
@@ -687,8 +678,8 @@ object DedupOps {
       // "guard off" means BOTH caps are off (ADVICE r21): a partial
       // guard (finite maxBucket only) still runs the bucket-cap window
       // once per self-join side — exactly the expensive subtree the
-      // persist exists for. Lifecycle (env gate, staging-chain skip,
-      // write-cleanup vs query-scoped registry): Staging.scopedPersist.
+      // persist exists for. Lifecycle (staging-chain skip, write-
+      // cleanup vs query-scoped registry): Staging.scopedPersist.
       if (g.maxGroupAllPairs == Int.MaxValue && g.maxBucket == Int.MaxValue)
         capped
       else Staging.scopedPersist(capped, bandCacheRegistry)
@@ -729,10 +720,8 @@ object DedupOps {
     * [[bandCacheMaxEntries]] frames the least-recently-registered is
     * evicted and unpersisted automatically (repeat calls over the SAME
     * corpus share one CacheManager entry and never consume a new
-    * slot). SPARK_GRAFT_BAND_CACHE_MAX overrides the window. */
-  private[graft] val bandCacheMaxEntries: Int =
-    sys.env.get("SPARK_GRAFT_BAND_CACHE_MAX")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(8)
+    * slot). */
+  private[graft] val bandCacheMaxEntries: Int = 8
   private[graft] val bandCacheRegistry =
     new SessionCacheRegistry(bandCacheMaxEntries, queryScoped = true)
 
@@ -1283,14 +1272,12 @@ object DedupOps {
   def prefixJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val sets = docSetsTable(spark, sfDir)
     val prefix = prefixTable(spark, sfDir, prefixThreshold)
-    // default `auto`: broadcast sketch prefilter while the corpus
-    // fits the ceiling (parquet-metadata count — cheap), past it the
-    // enumeration-grain rejection via the sketches CARRIED on the
-    // prefix rows — no broadcast, no cliff (PERF §44);
-    // `carried`/`broadcast`/`pair`/`off` modes remain as A/B
-    // instruments (exact at any size on every path — the verify is
-    // the recall authority, the prefilters only drop pairs the bound
-    // proves non-qualifying)
+    // broadcast sketch prefilter while the corpus fits the ceiling
+    // (parquet-metadata count — cheap), past it the enumeration-grain
+    // rejection via the sketches CARRIED on the prefix rows — no
+    // broadcast, no cliff (PERF §44). Exact on both paths: the verify
+    // is the recall authority, the prefilters only drop pairs the
+    // bound proves non-qualifying
     val cand = candidatesDispatch(prefix, sets, prefixThreshold,
       Tables.documents(spark, sfDir).count())
     verifyPrefixPairs(cand, sets, prefixThreshold)
@@ -1311,9 +1298,9 @@ object DedupOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sets = setsFrom(bg)
-      // default `auto`: broadcast prefilter under the ceiling,
-      // carried enumeration-grain rejection past it (the persisted
-      // prefix frame carries `sk`) — no cliff. The ceiling guard
+      // broadcast prefilter under the ceiling, carried
+      // enumeration-grain rejection past it (the persisted prefix
+      // frame carries `sk`) — no cliff. The ceiling guard
       // counts docs off the PERSISTED prefix frame, not `docs`:
       // an arbitrary caller lineage must not be recomputed for a count
       val cand = candidatesDispatch(prefix, sets, t,
@@ -1338,10 +1325,10 @@ object DedupOps {
     * (PERF §44). The carry is cheap because the prefix frame is
     * doc-grain small (~(1-t)n+1 rows/doc: 2.2/doc on this corpus,
     * 0.2n/doc for book-sized docs), and consumers that don't ask for
-    * `sk` prune the column at the parquet scan (`SkPruneProbe`). The
-    * per-doc sketch aggregate is its OWN doc_id exchange
-    * (`PrefixPlanProbe`: the window's exchange is not reused — its
-    * input carries the dfs join), but a narrow one: (doc_id, int32)
+    * `sk` prune the column at the parquet scan (PERF §44). The
+    * per-doc sketch aggregate is its OWN doc_id exchange (the
+    * window's exchange is not reused — its input carries the dfs
+    * join; PERF §45), but a narrow one: (doc_id, int32)
     * per shingle row, ~15–20% of the window exchange's width, linear
     * in corpus bytes — and since r16 paid ONLY on the unstaged path:
     * the staged build joins the prefix rows to the doc_sets table's
@@ -1490,14 +1477,7 @@ object DedupOps {
     * bucketing only for corpora whose shingle buckets mix widely
     * different lengths AND whose enumeration dominates the profile. */
   private[graft] def candidatesFrom(prefix: DataFrame, t: Double): DataFrame =
-    candidatesWithSizesFrom(prefix, t).select("doc_a", "doc_b")
-
-  /** [[candidatesFrom]] variant that also carries the two docs' set
-    * sizes (aligned to the doc_a/doc_b ordering) — the sketch
-    * prefilter's bound needs them without touching the set table. */
-  private[graft] def candidatesWithSizesFrom(prefix: DataFrame,
-                                             t: Double): DataFrame =
-    aggregateEnumerated(enumeratedCollisions(prefix, t), t)
+    aggregateEnumerated(enumeratedCollisions(prefix, t), t).select("doc_a", "doc_b")
 
   /** The candidate stage's ENUMERATION alone: one row per h60 prefix
     * collision that survives the rank and length-ratio bounds — the
@@ -1532,12 +1512,12 @@ object DedupOps {
               when(col("xa") <= col("ya"), col("ny")).otherwise(col("nx")).as("nb"))
   }
 
-  /** [[candidatesWithSizesFrom]] with the sketch bound applied to the
+  /** [[candidatesFrom]] with the sketch bound applied to the
     * ENUMERATION rows, before the pair aggregate (PERF §31). The
     * bound depends only on the two doc identities, so every collision
     * row of a pair shares the verdict — dropping them pre-aggregate
     * drops whole pairs, never partial rows, and only pairs the exact
-    * verify would reject (same bound as [[sketchPrefilter]]). The two
+    * verify would reject (same bound as [[sketchPrefilterBare]]). The two
     * sketch attaches are broadcast hash joins that stay inside the
     * enumeration's codegen stage: the pair aggregate's hash table
     * then holds only sketch-surviving pairs (~25.6k at 100×) instead
@@ -1555,8 +1535,9 @@ object DedupOps {
     * evaluated INLINE in the self-join's own stage — the two sides'
     * sketches are already in the joined row, no attach join at all.
     * Same bound, same saturation bypass, and the same survivors as
-    * [[candidatesSketchFiltered]] / [[sketchPrefilterBucketed]]
-    * (`BucketSketchSpec` pins all three pair sets identical), so the
+    * [[candidatesSketchFiltered]] (`BucketSketchSpec` pins both
+    * candidate sets identical to each other and their verified pairs
+    * to the unfiltered [[candidatesFrom]]'s), so the
     * pair aggregate's hash table holds ~25.6k sketch-survivors at
     * 100× instead of 58.7M — at ANY corpus size. Cost of the carry:
     * +128 B per PREFIX row ((1-t)n+1 rows/doc) through the self-join's
@@ -1591,57 +1572,23 @@ object DedupOps {
         col("x.sk").as("xsk"), col("y.sk").as("ysk"))
   }
 
-  /** q79 candidate-path selector: `auto` (default — the broadcast
-    * prefilter while the corpus fits [[sketchDocCeiling]], the
-    * carried enumeration-grain path past it: the quiet-box A/B at
-    * 100× measured broadcast 7.9–9.2 s vs carried 9.6–10.1 s under
-    * the ceiling, and carried 9.6–10.1 s vs pair-grain 29–36 s past
-    * it — PERF §44), `carried` (force enumeration-grain,
-    * ceiling-free), `broadcast` (r14 shape, pair-grain fallback past
-    * the ceiling), `pair` (force the pair-grain bucketed prefilter),
-    * `off` (no sketch prefilter; the verify's in-SMJ bound still
-    * applies). Env SPARK_GRAFT_Q79_SKETCH, sys-prop
-    * `graft.q79.sketch` for in-JVM A/Bs. */
-  private[graft] def q79SketchMode: String =
-    sys.env.get("SPARK_GRAFT_Q79_SKETCH")
-      .orElse(sys.props.get("graft.q79.sketch"))
-      .map(_.toLowerCase).getOrElse("auto")
-
-  /** Candidate stage dispatch shared by [[prefixJaccardPairs]] and
-    * [[prefixJaccardPairsOf]]: `nDocs` is by-name — only the
-    * auto/broadcast modes need a corpus count for the ceiling check.
-    * Unknown mode strings fall back to `auto` WITH a warning (ADVICE
-    * r15: the old catch-all silently routed typos like 'carry' into
-    * the no-prefilter path, regressing q79 3× with zero signal); only
-    * the explicit `off` disables the prefilter. The auto dispatch
-    * prints its choice once per call — the observability behind the
-    * natural past-ceiling run (VERDICT r15 #4). */
+  /** q79 candidate stage shared by [[prefixJaccardPairs]] and
+    * [[prefixJaccardPairsOf]]: the broadcast sketch prefilter while the
+    * corpus fits [[sketchDocCeiling]], the carried enumeration-grain
+    * path past it. The quiet-box A/B at 100× measured broadcast
+    * 7.9–9.2 s vs carried 9.6–10.1 s under the ceiling, and carried
+    * 9.6–10.1 s vs the pair-grain bucketed prefilter 29–36 s past it
+    * (PERF §44). The dispatch prints its choice once per call — the
+    * observability behind the natural past-ceiling run (VERDICT r15
+    * #4). */
   private def candidatesDispatch(prefix: DataFrame, sets: DataFrame,
-      t: Double, nDocs: => Long): DataFrame = {
-    def auto(): DataFrame = {
-      val n = nDocs
-      val ceiling = sketchDocCeiling(prefix.sparkSession)
-      val carried = n > ceiling
-      System.err.println(s"[graft] q79 sketch auto: nDocs=$n ceiling=$ceiling -> " +
-        (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
-      if (carried) candidatesSketchCarried(prefix, t)
-      else candidatesSketchFiltered(prefix, sets, t)
-    }
-    q79SketchMode match {
-      case "auto"    => auto()
-      case "carried" => candidatesSketchCarried(prefix, t)
-      case "broadcast" =>
-        if (nDocs <= sketchDocCeiling(prefix.sparkSession))
-          candidatesSketchFiltered(prefix, sets, t)
-        else sketchPrefilterBucketed(candidatesWithSizesFrom(prefix, t), sets, t)
-      case "pair" =>
-        sketchPrefilterBucketed(candidatesWithSizesFrom(prefix, t), sets, t)
-      case "off" => candidatesFrom(prefix, t)
-      case other =>
-        System.err.println(s"[graft] WARNING: unknown q79 sketch mode '$other' " +
-          "(expected auto|carried|broadcast|pair|off) — falling back to 'auto'")
-        auto()
-    }
+      t: Double, nDocs: Long): DataFrame = {
+    val ceiling = sketchDocCeiling(prefix.sparkSession)
+    val carried = nDocs > ceiling
+    System.err.println(s"[graft] q79 sketch auto: nDocs=$nDocs ceiling=$ceiling -> " +
+      (if (carried) "carried (past ceiling, no broadcast)" else "broadcast prefilter"))
+    if (carried) candidatesSketchCarried(prefix, t)
+    else candidatesSketchFiltered(prefix, sets, t)
   }
 
   /** Corpus-size ceiling for the broadcast sketch prefilter: 2M docs
@@ -1651,12 +1598,14 @@ object DedupOps {
     * depends on it) and the bound still applies in the verify's
     * bucket-aligned SMJ via the doc_sets `sk` column
     * ([[verifyHashPass]]) — the bucketed path has no ceiling, so past
-    * 2M docs q79/verify degrade gracefully to sketch-in-SMJ instead
-    * of falling off a cliff to raw intersects.
+    * 2M docs the LSH verify degrades gracefully to sketch-in-SMJ
+    * instead of falling off a cliff to raw intersects, and q79 rejects
+    * at enumeration grain ([[candidatesSketchCarried]]).
     *
     * SPARK_GRAFT_SKETCH_MAX_DOCS (env, or `graft.sketch.maxdocs`
-    * sys-prop for in-JVM specs) overrides — `0` forces the bucketed
-    * path at any size, the A/B instrument behind PERF §38. */
+    * sys-prop for in-JVM specs) overrides — `0` forces the
+    * past-ceiling paths at any size (PERF §38), the specs' only way
+    * onto them at test scale. */
   private[graft] val sketchMaxDocs = 2000000L
   private[graft] def sketchMaxDocsEff: Long =
     sys.env.get("SPARK_GRAFT_SKETCH_MAX_DOCS")
@@ -1676,8 +1625,8 @@ object DedupOps {
   private[graft] def sketchDocCeiling(spark: SparkSession): Long =
     if (stagingSessions.contains(spark)) sketchMaxDocsEff / 4 else sketchMaxDocsEff
 
-  /** The ONE sketch-bound filter behind all three prefilter entry
-    * points (PERF §29/§31/§33): attach both pair sides' broadcast
+  /** The ONE sketch-bound filter behind both broadcast prefilter
+    * entry points (PERF §31/§33): attach both pair sides' broadcast
     * sketches by (`aCol`, `bCol`), compute the bucket-min-sum upper
     * bound, and keep rows whose bound can still reach the threshold.
     * `sizeCols` names the per-side set-size columns when the input
@@ -1692,8 +1641,7 @@ object DedupOps {
     * saturation) bypass the filter entirely. */
   private def sketchBoundFilter(pairs: DataFrame, sets: DataFrame, t: Double,
       aCol: String, bCol: String,
-      sizeCols: Option[(String, String)],
-      hint: Boolean = true): DataFrame = {
+      sizeCols: Option[(String, String)]): DataFrame = {
     val tL = loosened(t)
     // reuse the staged doc_sets sketch column when present (written
     // once at staging time) instead of re-hashing every hs array —
@@ -1705,15 +1653,9 @@ object DedupOps {
     val skCols = col("doc_id") +: skSrc.as("__sk") +:
       (if (sizeCols.isEmpty) Seq(col("n")) else Nil)
     val sk = sets.select(skCols: _*)
-    // hint=false is the PAST-CEILING shape: no forced broadcast — the
-    // sketch side is the bucketed doc_sets projection (128 B/doc), so
-    // the attach plans a bucket-aligned SMJ in which only the pair
-    // side shuffles, at any corpus size (PERF §38)
-    def side(keyOut: String, skOut: String, nOut: Option[String]) = {
-      val proj = sk.select(col("doc_id").as(keyOut) +: col("__sk").as(skOut) +:
-        nOut.map(col("n").as(_)).toSeq: _*)
-      if (hint) broadcast(proj) else proj
-    }
+    def side(keyOut: String, skOut: String, nOut: Option[String]) =
+      broadcast(sk.select(col("doc_id").as(keyOut) +: col("__sk").as(skOut) +:
+        nOut.map(col("n").as(_)).toSeq: _*))
     val (na, nb) = sizeCols.getOrElse(("__na", "__nb"))
     val attached = pairs
       .join(side(aCol, "__ska", if (sizeCols.isEmpty) Some("__na") else None), aCol)
@@ -1726,25 +1668,9 @@ object DedupOps {
       Seq("__ska", "__skb", "__ub") ++ (if (sizeCols.isEmpty) Seq(na, nb) else Nil): _*)
   }
 
-  /** Verify PREFILTER over aggregated candidate pairs carrying their
-    * set sizes (PERF §29): zero-exchange bound rejection before the
-    * SMJ verify. */
-  private[graft] def sketchPrefilter(candWithSizes: DataFrame, sets: DataFrame,
-                                     t: Double): DataFrame =
-    sketchBoundFilter(candWithSizes, sets, t, "doc_a", "doc_b",
-      Some(("na", "nb"))).select("doc_a", "doc_b")
-
-  /** [[sketchPrefilter]] without the broadcast — the PAST-CEILING
-    * pair-grain shape: sketches attach through the bucketed doc_sets
-    * SMJ (128 B/doc), only the pair side shuffles (PERF §38). */
-  private[graft] def sketchPrefilterBucketed(candWithSizes: DataFrame,
-      sets: DataFrame, t: Double): DataFrame =
-    sketchBoundFilter(candWithSizes, sets, t, "doc_a", "doc_b",
-      Some(("na", "nb")), hint = false).select("doc_a", "doc_b")
-
-  /** [[sketchPrefilter]] for candidate frames that carry only
+  /** Verify PREFILTER for candidate frames that carry only
     * (doc_a, doc_b): the set sizes ride the same broadcast rows as
-    * the sketches, so the filter still runs in the candidate-emitting
+    * the sketches, so the filter runs in the candidate-emitting
     * stage with zero exchange. Used by the LSH verify (PERF §33) —
     * its 8/4 preset floods ~2.5M est-candidates at 100× of which ~1%
     * survive the exact verify. */
@@ -1781,8 +1707,8 @@ object DedupOps {
     *      arrays; the final compare is the ORACLE's compare —
     *      round(j, 6) >= t. */
   /** Stage 1 of the verify alone (the hash upper bound) — factored
-    * out so Q79Probe can attribute verify time between the bound pass
-    * and the exact confirm. */
+    * out so verify time attributes between the bound pass and the
+    * exact confirm (PERF §29). */
   private[graft] def verifyHashPass(cand: DataFrame, sets: DataFrame,
                                     t: Double): DataFrame = {
     // Bucketed sketch bound INSIDE the verify SMJ (VERDICT r14 #2):
@@ -2086,17 +2012,16 @@ object DedupOps {
     // the star branch. Same persist + lifecycle as lshCandidatesFrom
     // (registerComputeCleanup inside a staged write, else the bounded
     // band-cache LRU), and the same gates: skip when the guard is off
-    // (plain explode is cheaper to recompute than to cache), when
-    // SPARK_GRAFT_BAND_PERSIST=off, or on a stageAll chain thread
-    // (PERF §35 — the fill job serializes a chain segment other
+    // (plain explode is cheaper to recompute than to cache) and on a
+    // stageAll chain thread (PERF §35 — the fill job serializes a chain segment other
     // chains' work no longer hides).
     val bands = {
       val capped = SkewGuard.capBuckets(bands0, "bk", "doc_id", g.maxBucket)
       // "guard off" means BOTH caps are off (ADVICE r21): a partial
       // guard (finite maxBucket only) still runs the bucket-cap window
       // once per self-join side — exactly the expensive subtree the
-      // persist exists for. Lifecycle (env gate, staging-chain skip,
-      // write-cleanup vs query-scoped registry): Staging.scopedPersist.
+      // persist exists for. Lifecycle (staging-chain skip, write-
+      // cleanup vs query-scoped registry): Staging.scopedPersist.
       if (g.maxGroupAllPairs == Int.MaxValue && g.maxBucket == Int.MaxValue)
         capped
       else Staging.scopedPersist(capped, bandCacheRegistry)

@@ -149,16 +149,14 @@ private[graft] object Staging {
 
   /** Persist `df` with the shared dedup-guard persist lifecycle (one
     * definition for the band-stream, simhash-band and q81-wins sites —
-    * the r22 review found the dance copy-pasted three times):
-    * `SPARK_GRAFT_BAND_PERSIST=off` disables outright; on a stageAll
-    * chain thread the persist is skipped unless `force` (PERF §35 —
-    * the fill job serializes a chain segment other chains' work no
-    * longer hides); inside a staged write the frame is released by the
+    * the r22 review found the dance copy-pasted three times): on a
+    * stageAll chain thread the persist is skipped (PERF §35 — the fill
+    * job serializes a chain segment other chains' work no longer
+    * hides); inside a staged write the frame is released by the
     * write-completion hook; a pure library call tracks it in
     * `registry` (query-scoped completion release + LRU backstop). */
   def scopedPersist(df: DataFrame, registry: SessionCacheRegistry): DataFrame = {
-    val env = sys.env.get("SPARK_GRAFT_BAND_PERSIST")
-    if (env.contains("off") || (inStagingChain && !env.contains("force"))) df
+    if (inStagingChain) df
     else {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       if (!registerComputeCleanup(() => p.unpersist(false)))

@@ -23,7 +23,7 @@ import graft.operators.EmbeddingOps
   *     than the float corpus even carrying ids+norms+buckets —
   *     parquet dictionary-encodes the 255-value codes, random floats
   *     don't compress — and the in-memory/shuffle form is 4× narrower
-  *     per component; SemanticGateProbe is the measurement), its
+  *     per component; measured in PERF §57), its
   *     quantized norm precomputed, its sign-LSH bucket id
   *     assigned (same planes as q26/q27), and the table written
   *     BUCKETED AND SORTED on the bucket id.

@@ -64,82 +64,84 @@ class BucketSketchSpec extends SparkSpec {
     assert(((interp(2) & 0xff) << 8 | (interp(3) & 0xff)) == 3)
   }
 
+  /** Verified (doc_a, doc_b, jaccard) triples of a pair frame. */
+  private def pairSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** (doc_a, doc_b) candidate pairs of a candidate frame. */
+  private def candSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Run `body` with the broadcast-prefilter ceiling forced to 0 docs
+    * (every ceiling check then takes its past-ceiling branch). */
+  private def pastCeiling[T](body: => T): T = {
+    sys.props("graft.sketch.maxdocs") = "0"
+    try body finally sys.props.remove("graft.sketch.maxdocs"): Unit
+  }
+
   test("q79 prefilter is output-invariant (parity with the plain path)") {
-    // sf0.01: the decade where q79 has verified pairs (25 at t=0.8)
+    // sf0.01: the decade where q79 has verified pairs (25 at t=0.8).
+    // The reference is the unfiltered candidate stage + exact verify;
+    // both sketch-bound candidate paths must reject something and
+    // verify to exactly the reference pair set.
     val dir = "/root/testdata/sf0.01"
     val t = DedupOps.prefixThreshold
     DedupOps.withStagingRoot(None) {
       val prefix = DedupOps.prefixTable(spark, dir, t)
       val sets = DedupOps.docSetsTable(spark, dir)
-      val candS = DedupOps.candidatesWithSizesFrom(prefix, t)
-        .localCheckpoint(true)
-      val nCand = candS.count()
-      val nPre = DedupOps.sketchPrefilter(candS, sets, t).count()
-      assert(nPre < nCand,
-        s"prefilter must reject something: $nPre of $nCand kept")
-      def pairs(cand: org.apache.spark.sql.DataFrame) =
-        DedupOps.verifyPrefixPairs(cand, sets, t).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val plain = pairs(candS.select("doc_a", "doc_b"))
-      val filtered = pairs(DedupOps.sketchPrefilter(candS, sets, t))
+      val all = DedupOps.candidatesFrom(prefix, t).localCheckpoint(true)
+      val plain = pairSet(DedupOps.verifyPrefixPairs(all, sets, t))
       assert(plain.nonEmpty, "expected verified pairs at sf0.01")
-      assert(filtered == plain,
-        "prefilter must not change the verified pair set")
-      // the shipped path applies the same bound BEFORE the pair
-      // aggregate (enumeration-row grain) — must also be invariant,
-      // and its candidate set must equal the post-aggregate filter's
-      val preAgg = DedupOps.candidatesSketchFiltered(prefix, sets, t)
-      val candPost = DedupOps.sketchPrefilter(candS, sets, t).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val candPre = preAgg.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(candPre == candPost,
-        "pre-aggregate sketch filter must keep the same candidate set")
-      assert(pairs(preAgg) == plain,
-        "pre-aggregate filter must not change the verified pair set")
+      val nAll = all.count()
+      Seq("broadcast" -> DedupOps.candidatesSketchFiltered(prefix, sets, t),
+          "carried" -> DedupOps.candidatesSketchCarried(prefix, t)).foreach {
+        case (path, cand) =>
+          val kept = cand.localCheckpoint(true)
+          assert(kept.count() < nAll,
+            s"$path prefilter must reject something: ${kept.count()} of $nAll kept")
+          assert(pairSet(DedupOps.verifyPrefixPairs(kept, sets, t)) == plain,
+            s"$path prefilter must not change the verified pair set")
+      }
     }
     spark.catalog.clearCache()
   }
 
   test("bucketed sketch path (past the broadcast ceiling) is output-invariant") {
-    // VERDICT r14 #2: past sketchMaxDocs the broadcast prefilter is
-    // skipped and the bound must still hold pairs back inside the
-    // verify's bucket-aligned SMJ via the staged doc_sets `sk`
-    // column. Forcing the ceiling to 0 (sys-prop override) exercises
-    // exactly the past-ceiling plan; the pair set must be identical
-    // to the default (broadcast-prefiltered) plan, staged and
-    // unstaged.
+    // Past the ceiling q79 takes the carried path and the LSH verify
+    // skips its broadcast prefilter, the bound then holding pairs back
+    // inside the verify's bucket-aligned SMJ via the staged doc_sets
+    // `sk` column (PERF §38/§44). Forcing the ceiling to 0 exercises
+    // exactly those plans: q79 (staged, unstaged and the library
+    // `prefixJaccardPairsOf`) and q22 must give the default plan's
+    // pair sets.
     val dir = "/root/testdata/sf0.01"
-    def q79pairs() =
-      graft.operators.DedupOps.prefixJaccardPairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def q22pairs() =
-      graft.operators.DedupOps.jaccardVerify(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def q79() = pairSet(DedupOps.prefixJaccardPairs(spark, dir))
+    def q79of() = pairSet(DedupOps.prefixJaccardPairsOf(
+      graft.Tables.documents(spark, dir), DedupOps.prefixThreshold))
+    def q22() = pairSet(DedupOps.jaccardVerify(spark, dir))
     val stageDir =
       java.nio.file.Files.createTempDirectory("graft_sketch_bucketed").toString
-    try DedupOps.withStagingRoot(Some(stageDir)) {
+    val (refQ79, refQ22) = try DedupOps.withStagingRoot(Some(stageDir)) {
       // staged doc_sets must physically carry the sketch column
-      val sets = DedupOps.docSetsTable(spark, dir)
-      assert(sets.columns.contains("sk"),
+      assert(DedupOps.docSetsTable(spark, dir).columns.contains("sk"),
         "staged doc_sets must carry the sketch column")
-      val defaultQ79 = q79pairs()
-      val defaultQ22 = q22pairs()
-      assert(defaultQ79.nonEmpty && defaultQ22.nonEmpty)
-      sys.props("graft.sketch.maxdocs") = "0"
-      try {
-        assert(q79pairs() == defaultQ79,
-          "bucketed-path q79 pair set must match the broadcast path")
-        assert(q22pairs() == defaultQ22,
-          "bucketed-path LSH-verified pair set must match")
-      } finally sys.props.remove("graft.sketch.maxdocs"): Unit
+      val ref = (q79(), q22())
+      assert(ref._1.nonEmpty && ref._2.nonEmpty)
+      pastCeiling {
+        assert(q79() == ref._1, "staged past-ceiling q79 pair set must match")
+        assert(q22() == ref._2, "staged past-ceiling q22 pair set must match")
+      }
+      ref
     } finally spark.catalog.clearCache()
-    // unstaged: no staged sk column — verifyHashPass computes the
-    // sketch in the scan stage; same invariance
+    // unstaged: no staged sk column, the verify computes the sketch in
+    // its scan stage; the persisted prefix frame carries its own sk
     DedupOps.withStagingRoot(None) {
-      sys.props("graft.sketch.maxdocs") = "0"
-      try assert(q79pairs().nonEmpty)
-      finally sys.props.remove("graft.sketch.maxdocs"): Unit
+      assert(q79() == refQ79 && q79of() == refQ79 && q22() == refQ22,
+        "unstaged default-ceiling pair sets must match the staged ones")
+      pastCeiling {
+        assert(q79() == refQ79 && q79of() == refQ79 && q22() == refQ22,
+          "unstaged past-ceiling pair sets must match the staged ones")
+      }
     }
     spark.catalog.clearCache()
   }
@@ -147,49 +149,27 @@ class BucketSketchSpec extends SparkSpec {
   test("carried sketch path (enumeration-grain, ceiling-free) is output-invariant") {
     // r15 PERF §44: the prefix rows carry the 128 B sketch, so the
     // bound rejects at enumeration grain with no broadcast at all —
-    // candidate set and verified pairs must be identical to every
-    // other mode, staged and unstaged.
+    // its candidate set must equal the broadcast prefilter's, staged
+    // and unstaged.
     val dir = "/root/testdata/sf0.01"
     val t = DedupOps.prefixThreshold
-    def q79mode(m: String) = {
-      sys.props("graft.q79.sketch") = m
-      try graft.operators.DedupOps.prefixJaccardPairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      finally sys.props.remove("graft.q79.sketch"): Unit
-    }
-    val stageDir =
-      java.nio.file.Files.createTempDirectory("graft_sketch_carried").toString
-    try DedupOps.withStagingRoot(Some(stageDir)) {
+    def parity(tag: String): Unit = {
       val prefix = DedupOps.prefixTable(spark, dir, t)
-      assert(prefix.columns.contains("sk"),
-        "staged prefix table must carry the sketch column")
+      assert(prefix.columns.contains("sk"), s"$tag prefix frame must carry the sketch column")
       val sets = DedupOps.docSetsTable(spark, dir)
-      def candSet(c: org.apache.spark.sql.DataFrame) =
-        c.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val carried = candSet(DedupOps.candidatesSketchCarried(prefix, t))
       val bcast = candSet(DedupOps.candidatesSketchFiltered(prefix, sets, t))
       val all = candSet(DedupOps.candidatesFrom(prefix, t))
       assert(carried == bcast,
-        "carried enumeration filter must keep the broadcast path's candidate set")
+        s"$tag carried enumeration filter must keep the broadcast path's candidate set")
       assert(carried.size < all.size,
-        s"carried filter must reject something: ${carried.size} of ${all.size}")
-      val base = q79mode("off")
-      assert(base.nonEmpty)
-      assert(q79mode("carried") == base, "carried mode pair set must match")
-      assert(q79mode("broadcast") == base, "broadcast mode pair set must match")
-      assert(q79mode("pair") == base, "pair mode pair set must match")
-    } finally spark.catalog.clearCache()
-    // unstaged: the persisted prefix frame carries sk too — with the
-    // ceiling forced to 0, the default `auto` dispatch takes the
-    // carried path (no broadcast anywhere in the plan)
-    sys.props("graft.sketch.maxdocs") = "0"
-    try DedupOps.withStagingRoot(None) {
-      val docs = graft.Tables.documents(spark, dir)
-      val viaLib = DedupOps.prefixJaccardPairsOf(docs, t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(viaLib.nonEmpty && viaLib == q79mode("off"),
-        "unstaged carried path must match the unfiltered pair set")
-    } finally sys.props.remove("graft.sketch.maxdocs"): Unit
+        s"$tag carried filter must reject something: ${carried.size} of ${all.size}")
+    }
+    val stageDir =
+      java.nio.file.Files.createTempDirectory("graft_sketch_carried").toString
+    try DedupOps.withStagingRoot(Some(stageDir))(parity("staged"))
+    finally spark.catalog.clearCache()
+    DedupOps.withStagingRoot(None)(parity("unstaged"))
     spark.catalog.clearCache()
   }
 

@@ -145,6 +145,58 @@ class StagingSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("every staged query hashes the same after stageAll as on the unstaged library path") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import graft.operators.DedupOps
+    // Differential over the two shapes a staged query can take: after
+    // stageAll (staged tables read back; stageAll's chains skipped the
+    // band persists) and with staging off (the library path, which
+    // takes the query-scoped band/prefix persists). Only the staged
+    // queries are built: building a query registers its query-scoped
+    // persists, which only an action over it releases.
+    val stagedQueries = Seq("q20_minhash_signatures", "q21_lsh_candidates",
+      "q22_jaccard_verify", "q23_simhash", "q24_simhash_pairs",
+      "q32_dedup_keep_list", "q33_ivf_ann", "q42_minhash_scale",
+      "q43_lsh_scale", "q44_jaccard_scale", "q48_decontaminate",
+      "q60_containment", "q61_incremental_dedup", "q62_source_overlap",
+      "q63_curation_funnel", "q79_prefix_jaccard", "q80_repeated_spans",
+      "q83_quantized_bucketed_ann", "q84_quantized_ivf_ann")
+    def resultHash(df: DataFrame): (Long, Long, Long) = {
+      val cols = df.schema.fields.toSeq.map { f =>
+        val c = col(s"`${f.name}`")
+        f.dataType match {
+          case DoubleType | FloatType => round(c, 6)
+          case _: MapType => to_json(c)
+          case _ => c
+        }
+      }
+      val h = xxhash64(cols: _*)
+      val r = df.agg(count(lit(1)), sum(h.bitwiseAND(lit(0xffffffffL))),
+        sum(shiftrightunsigned(h, 32))).head()
+      (r.getLong(0), Option(r.get(1)).fold(0L)(_.toString.toLong),
+        Option(r.get(2)).fold(0L)(_.toString.toLong))
+    }
+    val root = Files.createTempDirectory("graft_stage_parity").toString
+    val staged = try DedupOps.withStagingRoot(Some(root)) {
+      DedupOps.stageAll(spark, sf)
+      stagedQueries.map { name =>
+        val df = SparkEntry.queries(name)(spark, sf)
+        assert(df.inputFiles.exists(_.contains(root)), s"$name must read a staged table")
+        name -> resultHash(df)
+      }
+    } finally spark.catalog.clearCache()
+    val diffs = DedupOps.withStagingRoot(None) {
+      staged.flatMap { case (name, h) =>
+        val u = resultHash(SparkEntry.queries(name)(spark, sf))
+        if (u == h) None else Some(s"$name staged=$h unstaged=$u")
+      }
+    }
+    spark.catalog.clearCache()
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+  }
+
   test("stageAll restores broadcast thresholds when staging FAILS (ADVICE r13)") {
     import graft.operators.DedupOps
     val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
